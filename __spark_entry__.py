@@ -6842,14 +6842,17 @@ prof AS (
   SELECT json_key, count(*)::BIGINT AS n_present,
     array_to_string(list_sort(list(DISTINCT jtype)), ',') AS types_csv,
     sum(CASE WHEN jtype = 'null' THEN 1 ELSE 0 END)::BIGINT AS n_null,
-    min(ival) AS int_lo, max(ival) AS int_hi,
+    CASE WHEN count(ival) = count(*) FILTER (WHERE jtype = 'integer')
+         THEN min(ival) END AS int_lo,
+    CASE WHEN count(ival) = count(*) FILTER (WHERE jtype = 'integer')
+         THEN max(ival) END AS int_hi,
     min(milli) AS num_lo_milli, max(milli) AS num_hi_milli,
     max(CASE WHEN jtype = 'string' THEN length(sval) END)::BIGINT
       AS str_maxlen
   FROM tv GROUP BY 1),
 sv AS (SELECT json_key, sval FROM tv WHERE jtype = 'string' GROUP BY 1, 2),
 en AS (SELECT json_key, count(*)::BIGINT AS n_distinct_str,
-         CASE WHEN count(*) <= 16
+         CASE WHEN count(*) <= 16 AND NOT bool_or(contains(sval, '|'))
               THEN string_agg(sval, '|' ORDER BY sval) END AS enum_csv
        FROM sv GROUP BY 1)
 SELECT p.json_key, p.n_present,

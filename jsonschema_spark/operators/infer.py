@@ -180,10 +180,11 @@ def infer_json_stats(
     Output, one row per censused well-formed key, ordered by key:
     (json_key, n_present, required, types_csv, n_null, int_lo, int_hi,
     num_lo_milli, num_hi_milli, str_maxlen, n_distinct_str, enum_csv).
-    ``required`` = present in every object row. ``enum_csv`` is the
-    sorted '|'-joined string values when a pure-string key has ≤
-    ``max_enum`` distinct values, else NULL. All floats are
-    milli-quantized bigints (oracle bit-stability convention).
+    ``required`` = present in every object row. ``int_lo``/``int_hi``
+    are NULL when any integer occurrence lies beyond int64. ``enum_csv``
+    is the sorted '|'-joined string values when a key has ≤ ``max_enum``
+    distinct string values and none contains '|', else NULL. All floats
+    are milli-quantized bigints (oracle bit-stability convention).
     """
     keys, _skipped, n_objects = census_keys(df, json_col, max_keys)
     if not keys:
@@ -196,13 +197,16 @@ def infer_json_stats(
         return df.sparkSession.createDataFrame([], schema)
     ex = _exploded(df, json_col, keys)
 
+    # integer bounds only when every integer occurrence fits int64: a
+    # bound over the fitting ones alone would reject the others
+    ints_fit = F.count("ival") == F.count(F.when(F.col("jtype") == "integer", 1))
     prof = ex.groupBy("json_key").agg(
         F.count(F.lit(1)).cast("long").alias("n_present"),
         F.array_join(F.array_sort(F.collect_set("jtype")), ",").alias("types_csv"),
         F.sum(F.when(F.col("jtype") == "null", 1).otherwise(0))
         .cast("long").alias("n_null"),
-        F.min("ival").alias("int_lo"),
-        F.max("ival").alias("int_hi"),
+        F.when(ints_fit, F.min("ival")).alias("int_lo"),
+        F.when(ints_fit, F.max("ival")).alias("int_hi"),
         F.min("milli").alias("num_lo_milli"),
         F.max("milli").alias("num_hi_milli"),
         F.max("slen").alias("str_maxlen"),
@@ -225,13 +229,16 @@ def infer_json_stats(
         .groupBy("json_key")
         .agg(F.array_join(F.array_sort(F.collect_list("sval")), "|")
              .alias("_enum_all"),
-             F.count(F.lit(1)).alias("_n_top"))
+             F.max(F.col("sval").contains("|")).alias("_has_sep"))
     )
+    # a value containing the separator cannot be split back out of the
+    # '|'-joined list: no enum for that key
     enum = (
         nd.join(topv, "json_key", "left")
         .select(
             "json_key", "n_distinct_str",
-            F.when(F.col("n_distinct_str") <= max_enum, F.col("_enum_all"))
+            F.when((F.col("n_distinct_str") <= max_enum) & ~F.col("_has_sep"),
+                   F.col("_enum_all"))
             .alias("enum_csv"),
         )
     )

@@ -30,8 +30,11 @@ Violation rows follow the standard Basic output shape
 
 from __future__ import annotations
 
+import json
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
-from typing import Optional, Union
+from typing import Callable, Optional, Union
 
 from pyspark.sql import Column, functions as F, types as T
 
@@ -50,6 +53,7 @@ from jsonschema_spark.plans.context import (
     not_,
     or_,
 )
+from jsonschema_spark.plans.registry import KEYWORD_COMPILERS
 
 VIOL_FIELDS = "keywordLocation:string,absoluteKeywordLocation:string,instanceLocation:string,error:string"
 VIOL_STRUCT_DT = f"struct<{VIOL_FIELDS}>"
@@ -64,9 +68,10 @@ class SchemaError(ValueError):
     pass
 
 
-@dataclass
+@dataclass(frozen=True)
 class Compiled:
-    """Result of compiling one schema node against a context."""
+    """Result of compiling one schema node against a context. Frozen: the
+    plan cache hands one instance to every caller."""
 
     ok: Cond
     viols: Optional[Column] = None  # None ⇔ statically no violations
@@ -603,8 +608,6 @@ def compile_node(
     # §2.7 extension hook: registered custom keyword compilers (the
     # Compiler std::function analogue, compiler.h:77-80) run after the
     # built-in dispatch, composing into the same conjunction
-    from jsonschema_spark.plans.registry import KEYWORD_COMPILERS
-
     for key, spec in KEYWORD_COMPILERS.items():
         if key in schema and key not in _KEYWORD_ORDER:
             kwp = f"{kw}/{_ptr_escape(key)}"
@@ -1323,19 +1326,67 @@ class CompiledSchema:
                       short_circuit, self.resolver, self.max_ref_depth,
                       format_strict=self.format_strict)
 
+    def _plan_key(self, mode: str, short_circuit: bool, context: str) -> Optional[tuple]:
+        """Everything a compile reads: the schema documents by content
+        (order-preserving, so property order — and with it violation order —
+        stays part of the key), the options, the registered custom keywords,
+        the mode and the context. None when the schema is not JSON data or a
+        registered keyword is unhashable: such a compile is not kept."""
+        try:
+            docs = json.dumps([self.schema, self.resolution_root, self.resolver])
+            key = (docs, self.base_uri, self.format_assertion, self.max_ref_depth,
+                   self.format_strict, mode, short_circuit, context,
+                   tuple(KEYWORD_COMPILERS.items()))
+            hash(key)
+        except (TypeError, ValueError):
+            return None
+        return key
+
     def compile_flat(
         self, df_schema: T.StructType, mode: str = "exhaustive", short_circuit: bool = True
     ) -> Compiled:
         """Compile against a flat DataFrame row (columns = properties)."""
-        ctx = FlatRowCtx(df_schema)
-        return compile_node(self.schema, ctx, "", self._cfg(mode, short_circuit))
+        return _cached_plan(
+            self._plan_key(mode, short_circuit, df_schema.json()),
+            lambda: compile_node(self.schema, FlatRowCtx(df_schema), "",
+                                 self._cfg(mode, short_circuit)))
 
     def compile_variant(
         self, doc_col: Column, mode: str = "exhaustive", short_circuit: bool = True
     ) -> Compiled:
         """Compile against a VARIANT column holding parsed JSON documents."""
-        ctx = VariantCtx(doc_col, "")
-        return compile_node(self.schema, ctx, "", self._cfg(mode, short_circuit))
+        # the normalized node tells a bound column (`v#12`) from a name
+        return _cached_plan(
+            self._plan_key(mode, short_circuit, doc_col._jc.node().normalized().toString()),
+            lambda: compile_node(self.schema, VariantCtx(doc_col, ""), "",
+                                 self._cfg(mode, short_circuit)))
+
+
+# Compiled plans, one per key and driver (the reference's compile-once
+# Template). The engine's plans are unresolved Column expressions with no
+# DataFrame binding, so reusing one on another DataFrame plans exactly as a
+# fresh compile would; building one costs thousands of py4j round trips.
+_PLAN_CACHE_SIZE = 32
+_plan_cache: "OrderedDict[tuple, Compiled]" = OrderedDict()
+_plan_cache_lock = threading.Lock()
+
+
+def _cached_plan(key: Optional[tuple], build: Callable[[], Compiled]) -> Compiled:
+    """The cached plan for ``key``, else ``build()`` kept under it (LRU)."""
+    if key is None:
+        return build()
+    with _plan_cache_lock:
+        hit = _plan_cache.get(key)
+        if hit is not None:
+            _plan_cache.move_to_end(key)
+            return hit
+    compiled = build()  # outside the lock: a compile takes about a second
+    with _plan_cache_lock:
+        _plan_cache[key] = compiled
+        _plan_cache.move_to_end(key)
+        while len(_plan_cache) > _PLAN_CACHE_SIZE:
+            _plan_cache.popitem(last=False)
+    return compiled
 
 
 def compile_schema(

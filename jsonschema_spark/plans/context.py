@@ -238,9 +238,10 @@ class FlatColCtx(Ctx):
         if t == "number" and self._tag == "integer":
             return True
         if t == "integer" and self._tag == "number":
-            # real with zero fraction counts as integer
+            # real with zero fraction counts as integer (round, not floor:
+            # floor yields a long, which saturates past int64)
             d = self.col.cast("double")
-            return d == F.floor(d).cast("double")
+            return d == F.round(d)
         return False
 
     def str_val(self) -> Column:
@@ -464,7 +465,7 @@ class VariantCtx(Ctx):
             return is_num
         if t == "integer":
             d = self.num_val()
-            return is_int | (is_num & (d == F.floor(d).cast("double")))
+            return is_int | (is_num & (d == F.round(d)))  # see FlatColCtx.is_type
         raise ValueError(f"unknown type {t}")
 
     def str_val(self) -> Column:

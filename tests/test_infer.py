@@ -3,6 +3,7 @@ lattice, enum window guard, required-ness, the KEY_RE path-safety
 filter, the infer→validate round-trip property, and a DuckDB parity
 check of the lattice mapping on the same corpus."""
 import duckdb
+from pyspark.sql import functions as F
 import pytest  # noqa: F401
 
 from jsonschema_spark import validate
@@ -160,3 +161,82 @@ def test_infer_validate_round_trip(spark):
         [('{"i": "not an int", "s": "aa", "f": 1.5, "b": true, "n": null, '
           '"o": {}, "a": [], "mix": 1}',)], "p string")
     assert validate(bad, schema, doc_col="p").collect()[0]["valid"] is False
+
+
+def _contributing_valid(spark, payloads):
+    """Infer a schema from ``payloads`` and validate the object rows that
+    produced it: every one must pass."""
+    df = spark.createDataFrame([(p,) for p in payloads], "p string")
+    schema = infer_json_schema(df, "p")
+    objs = df.where(F.json_object_keys("p").isNotNull())
+    got = {r["valid"] for r in validate(objs, schema, doc_col="p").collect()}
+    return schema, got
+
+
+def test_enum_value_with_separator_drops_the_enum(spark):
+    rows = ['{"s": "a|b"}', '{"s": "c"}', '{"t": "x"}', '{"t": "y"}']
+    st = _stats(spark, rows)
+    assert st["s"]["n_distinct_str"] == 2 and st["s"]["enum_csv"] is None
+    assert st["t"]["enum_csv"] == "x|y"
+    schema, got = _contributing_valid(spark, rows)
+    assert "enum" not in schema["properties"]["s"]
+    assert schema["properties"]["t"]["enum"] == ["x", "y"]
+    assert got == {True}
+
+
+def test_integer_beyond_int64_drops_the_bounds(spark):
+    big = 2 ** 64 + 5  # DECIMAL(20,0) in the VARIANT: no bigint reading
+    rows = ['{"i": 3, "j": 1}', '{"i": %d, "j": 9}' % big]
+    st = _stats(spark, rows)
+    assert st["i"]["types_csv"] == "integer"
+    assert (st["i"]["int_lo"], st["i"]["int_hi"]) == (None, None)
+    assert (st["j"]["int_lo"], st["j"]["int_hi"]) == (1, 9)
+    schema, got = _contributing_valid(spark, rows)
+    assert schema["properties"]["i"] == {"type": "integer"}
+    assert schema["properties"]["j"] == {"type": "integer", "minimum": 1, "maximum": 9}
+    assert got == {True}
+
+
+def test_infer_validate_round_trip_hypothesis(spark):
+    """Round trip over arbitrary string and integer values: the inferred
+    schema accepts every object row it was inferred from."""
+    import json
+
+    from hypothesis import given, settings, strategies as st
+
+    docs = st.lists(
+        st.fixed_dictionaries(
+            {"s": st.text(max_size=8), "i": st.integers(-(2 ** 70), 2 ** 70)},
+            optional={"o": st.sampled_from(["a|b", "|", "", "a", "b|"])}),
+        min_size=1, max_size=6)
+
+    @settings(max_examples=15, deadline=None)
+    @given(docs, st.booleans())
+    def check(ds, ascii_only):
+        payloads = [json.dumps(d, ensure_ascii=ascii_only) for d in ds]
+        _, got = _contributing_valid(spark, payloads)
+        assert got == {True}, payloads
+
+    check()
+
+
+def test_duckdb_mirror_separator_and_overflow_parity(spark):
+    """The oracle's DuckDB mirror applies the same two guards: no enum for
+    a key with a '|' value, no integer bounds past int64. (2^63, 2^64) is
+    integer-typed in both engines; DuckDB reads larger tokens as DOUBLE."""
+    import __spark_entry__ as entry
+
+    rows = ['{"s": "a|b", "t": "x", "i": 3, "j": 2}',
+            '{"s": "c", "t": "y", "i": %d, "j": -4}' % (2 ** 63 + 5),
+            '{"s": "c", "t": "x", "i": 7, "j": 0}']
+    sql = entry._INFER_PROPS_SQL.replace(entry._INFER_PAYLOAD_SQL, "SELECT unnest(?) AS p")
+    assert sql != entry._INFER_PROPS_SQL
+    con = duckdb.connect()
+    cur = con.execute(sql, [rows])
+    cols = [d[0] for d in cur.description]
+    duck = {r[0]: dict(zip(cols, r)) for r in cur.fetchall()}
+    st = _stats(spark, rows)
+    assert duck == st
+    assert st["s"]["enum_csv"] is None and st["t"]["enum_csv"] == "x|y"
+    assert (st["i"]["int_lo"], st["i"]["int_hi"]) == (None, None)
+    assert (st["j"]["int_lo"], st["j"]["int_hi"]) == (-4, 2)

@@ -250,3 +250,15 @@ def test_tree_unique_items_deep(spark):
         '{"xs": [true, 1]}',                          # boolean vs number ⇒ unique
         '{"xs": [{"a":1}, {"a":2}]}',
     ) == [False, False, True, True, True]
+
+
+def test_integer_type_beyond_int64(spark):
+    # integral tokens past int64 parse to DECIMAL(20,0) / DOUBLE; their
+    # zero-fraction test must not go through a saturating long
+    schema = {"type": "integer"}
+    assert verdicts(
+        spark, schema, str(2 ** 64 + 5), "1" + "0" * 40, "-" + str(2 ** 70), "1e300", "0.5",
+    ) == [True, True, True, True, False]
+    flat = spark.createDataFrame([(1e20,), (-1e300,), (2.5,)], "n double")
+    got = [r.valid for r in validate(flat, {"properties": {"n": {"type": "integer"}}}).collect()]
+    assert got == [True, True, False]
